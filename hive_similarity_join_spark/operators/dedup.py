@@ -100,7 +100,7 @@ def _ranked_tokens(
 
     ``token_dict``: a prebuilt (_tok, _rank) dictionary covering the
     corpus (r17 seam). The kernel's shared dictionary
-    (similarity._rank_tokens over tokenize()-distinct token sets) counts
+    (similarity._token_stats over tokenize()-distinct token sets) counts
     exactly the distinct (doc, token) pairs this function counts and
     ranks by the same (freq asc, token asc) order through the same
     ranked_by — so the (token -> rank) mapping is IDENTICAL, and with it

@@ -114,9 +114,19 @@ def _tokenized(df: DataFrame, id_col: str, text_col: str, tokens_col: str | None
     )
 
 
-def _rank_tokens(*relations: DataFrame) -> DataFrame:
-    """Stage 1: global token frequency over all inputs -> dense ascending
-    rank, rarest first (ties broken by token for determinism).
+def _token_stats(*relations: DataFrame, ndocs: bool = False) -> DataFrame:
+    """Stage 1: (_tok, _df, _rank) — each token's document frequency over
+    the UNION of the tokenized inputs and its dense ascending rank,
+    rarest first (ties broken by token for determinism). With
+    ``ndocs=True`` every row also carries ``_nd``, the number of
+    tokenized documents, joined in as a 1-row broadcast (no driver
+    action) — what the rarity weights need.
+
+    The one frequency-plus-rank pass of the package: the kernel's
+    dictionary (``_rank_tokens``) and the weighted kernels' rarity
+    dictionary (``_rarity_dict``) are views of it, and
+    queries/similarity_q.docs_token_stats checkpoints it once per
+    corpus for every documents consumer.
 
     The result is |vocabulary|-sized — small relative to the corpus even
     at 100 TB (vocab grows sub-linearly) — so it is broadcast at the join.
@@ -125,12 +135,26 @@ def _rank_tokens(*relations: DataFrame) -> DataFrame:
     URLs, numbers) is NOT small, and a global no-partition window would
     serialize its sort onto one task.
     """
-    freq = None
-    for rel in relations:
-        f = rel.select(F.explode("_toks").alias("_tok"))
-        freq = f if freq is None else freq.unionByName(f)
-    freq = freq.groupBy("_tok").agg(F.count(F.lit(1)).alias("_freq"))
-    return ranked_by(freq, ["_freq", "_tok"], "_rank").select("_tok", "_rank")
+    all_rel = relations[0]
+    for rel in relations[1:]:
+        all_rel = all_rel.unionByName(rel)
+    freq = (
+        all_rel.select(F.explode("_toks").alias("_tok"))
+        .groupBy("_tok")
+        .agg(F.count(F.lit(1)).alias("_df"))
+    )
+    stats = ranked_by(freq, ["_df", "_tok"], "_rank")
+    if ndocs:
+        stats = stats.crossJoin(
+            F.broadcast(all_rel.agg(F.count(F.lit(1)).alias("_nd")))
+        )
+    return stats
+
+
+def _rank_tokens(*relations: DataFrame) -> DataFrame:
+    """The kernel's (_tok, _rank) dictionary: the rank view of
+    ``_token_stats``."""
+    return _token_stats(*relations).select("_tok", "_rank")
 
 
 def _sorted_by_rank(rel: DataFrame, dict_df: DataFrame) -> DataFrame:
@@ -676,33 +700,24 @@ def containment_join(
     )
 
 
+def _rarity_weights(stats: DataFrame) -> DataFrame:
+    """(_tok, _rank, _w) from a ``_token_stats(..., ndocs=True)``
+    relation: integer weight w = N_docs - df + 1 (a hapax weighs N, a
+    token in every doc weighs 1). The weight formula lives here only."""
+    return stats.select(
+        "_tok",
+        "_rank",
+        (F.col("_nd") - F.col("_df") + F.lit(1)).cast("long").alias("_w"),
+    )
+
+
 def _rarity_dict(*rels: DataFrame) -> DataFrame:
     """(_tok, _rank, _w): the rarity-weight dictionary over the UNION
-    of the given tokenized relations — ONE global scale with integer
-    weight w = N_docs - df + 1 (a hapax weighs N, a token in every doc
-    weighs 1; in R-S forms a corpus-common token must not look rare
-    just because the batch is small). Rank is the distributed
-    rarest-first order; the corpus doc count joins in as a 1-row
-    broadcast (no driver action). Shared by every weighted join so the
-    weight formula lives in exactly one place."""
-    all_rel = rels[0]
-    for rel in rels[1:]:
-        all_rel = all_rel.unionByName(rel)
-    freq = (
-        all_rel.select(F.explode("_toks").alias("_tok"))
-        .groupBy("_tok")
-        .agg(F.count(F.lit(1)).alias("_df"))
-    )
-    ndocs = all_rel.agg(F.count(F.lit(1)).alias("_nd"))
-    return (
-        ranked_by(freq, ["_df", "_tok"], "_rank")
-        .crossJoin(F.broadcast(ndocs))
-        .select(
-            "_tok",
-            "_rank",
-            (F.col("_nd") - F.col("_df") + F.lit(1)).cast("long").alias("_w"),
-        )
-    )
+    of the given tokenized relations — ONE global scale (in R-S forms a
+    corpus-common token must not look rare just because the batch is
+    small). The weight view of ``_token_stats``; shared by every
+    weighted join."""
+    return _rarity_weights(_token_stats(*rels, ndocs=True))
 
 
 def _weighted_sorted(rel: DataFrame, dict_df: DataFrame) -> DataFrame:

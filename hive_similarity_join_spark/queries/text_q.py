@@ -16,6 +16,7 @@ from hive_similarity_join_spark.operators.similarity import similarity_join
 from hive_similarity_join_spark.queries.similarity_q import (
     _containment_oracle,
     _jaccard_oracle,
+    docs_token_dict,
 )
 from hive_similarity_join_spark.registry import query
 from hive_similarity_join_spark.sources.loader import load_table
@@ -393,9 +394,14 @@ def q_report_dup_rate(spark, sf_dir):
     touched ids -> left join onto the corpus -> one grouped count. The
     touched-id relation is doc-bounded (never pair-bounded), so the
     report adds one node-sized shuffle on top of the join regardless
-    of how pair-dense the corpus is."""
+    of how pair-dense the corpus is. The kernel takes the shared corpus
+    dictionary (``docs_token_dict``) instead of ranking the vocabulary
+    again."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = similarity_join(d, "doc_id", "text", threshold=NEAR_DUP_T)
+    pairs = similarity_join(
+        d, "doc_id", "text", threshold=NEAR_DUP_T,
+        token_dict=docs_token_dict(spark, sf_dir),
+    )
     dup = (
         pairs.select(F.col("id1").alias("doc_id"))
         .unionByName(pairs.select(F.col("id2").alias("doc_id")))

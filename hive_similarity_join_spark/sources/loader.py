@@ -2,8 +2,12 @@
 
 The reference family declares fixed table schemas (``CREATE TABLE`` +
 schema-on-read over HDFS files); here each table has an explicit
-``StructType`` (FIXTURES.md) and ``load_table`` verifies the parquet read
-matches it, so downstream operators never depend on inference.
+``StructType`` (FIXTURES.md) and ``load_table`` hands it to the parquet
+reader, so downstream operators never depend on inference — and a read
+plans without the footer-sampling Spark job that inference runs. The
+read does not verify the files against the schema: a column the files
+lack reads as null, and a physical type the reader cannot convert fails
+when the scan runs. ``events`` is the exception (see ``load_table``).
 
 Scale notes: ``spark.read.parquet`` is DataSource V2 — columnar,
 vectorized, with predicate pushdown and partition pruning for free. At
@@ -139,7 +143,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     identical wall values under the pinned UTC session). Both paths
     yield the same TimestampType column the oracle sees as naive
     microsecond timestamps; ns->us truncation is monotone, so
-    orderings and window assignments match either way.
+    orderings and window assignments match either way. Every other
+    table is read with its declared schema (no inference job).
     """
     tune(spark)
     if name not in SCHEMAS:
@@ -152,7 +157,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dict(raw.dtypes)["ts"] == "bigint":  # TIMESTAMP(NANOS) era
             return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -8,11 +8,25 @@ from tests.conftest import SF_SMOKE
 
 
 def test_all_tables_load_with_declared_schema(spark):
+    def fields(d):
+        return [(f.name, f.dataType, f.nullable) for f in d.schema.fields]
+
+    def rows(d):
+        return sorted((tuple(r) for r in d.collect()), key=repr)
+
     dfs = load_all(spark, SF_SMOKE)
     for name, df in dfs.items():
         declared = {f.name: f.dataType.simpleString() for f in SCHEMAS[name].fields}
         actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         assert actual == declared, f"{name}: {actual} != {declared}"
+        if name == "events":  # read by inference (two physical formats)
+            continue
+        # The schema-given read must be exactly the inferred read: same
+        # ordered (name, type, nullability) fields and the same rows.
+        inferred = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet")
+        assert fields(df) == fields(inferred), name
+        got = rows(df)
+        assert got == rows(inferred) and got, name
 
 
 def test_events_ts_is_microsecond_timestamp(spark):

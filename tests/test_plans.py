@@ -647,27 +647,22 @@ def test_containment_salted_candidate_join(spark):
 
 def test_weighted_containment_salted_and_python_free(spark):
     """The weighted kernel inherits the explicit salted repartition; no
-    Python evaluation nodes. r17: the vocabulary broadcast moved inside
-    the session-checkpointed docs_weighted_sorted generator (the trio
-    shares one sorted relation), so it is asserted on the GENERATOR
-    composition — the key's own verify joins against the stats-less
-    checkpoint correctly plan as sort-merge, which is also the honest
-    100 TB strategy for a corpus-sized verify side (the old
-    BroadcastHashJoin there was a small-SF stats artifact)."""
+    Python evaluation nodes. The vocabulary broadcast lives inside the
+    session-checkpointed docs_weighted_sorted generator (the trio
+    shares one sorted relation, weighted by the view of the shared
+    docs_token_stats), so it is asserted on the GENERATOR composition —
+    the key's own verify joins against the stats-less checkpoint
+    correctly plan as sort-merge, which is also the honest 100 TB
+    strategy for a corpus-sized verify side."""
     plan = explain_str(_q("q_simjoin_weighted_containment", spark))
     assert "REPARTITION_BY_NUM" in plan, plan
     assert "_salt" in plan
     assert "EvalPython" not in plan
-    from hive_similarity_join_spark.operators.similarity import (
-        _rarity_dict,
-        _tokenized,
-        _weighted_sorted,
+    from hive_similarity_join_spark.queries.similarity_q import (
+        weighted_sorted_plan,
     )
-    from hive_similarity_join_spark.sources.loader import load_table
 
-    r = _tokenized(load_table(spark, SF_SMOKE, "documents"),
-                   "doc_id", "text", None)
-    gen_plan = explain_str(_weighted_sorted(r, _rarity_dict(r)))
+    gen_plan = explain_str(weighted_sorted_plan(spark, SF_SMOKE))
     assert "BroadcastHashJoin" in gen_plan  # the vocabulary broadcast
     assert "EvalPython" not in gen_plan
 

@@ -209,3 +209,73 @@ def test_session_ckpt_concurrent_same_name_builds_once(spark):
         assert vals[0].count() == 50
     finally:
         release_session_pins()
+
+
+def test_docs_token_stats_views_equal_inline_dictionaries(spark):
+    """The shared corpus statistics reproduce both dictionaries the
+    kernels used to build inline: the (_tok, _rank) view equals the
+    kernel's frequency-then-rank dictionary row for row, and the weight
+    view equals ``_rarity_dict``'s (_tok, _rank, _w)."""
+    from pyspark.sql import functions as F
+
+    from hive_similarity_join_spark.operators.rank import ranked_by
+    from hive_similarity_join_spark.operators.similarity import (
+        _rarity_dict,
+        _rarity_weights,
+        _tokenized,
+    )
+    from hive_similarity_join_spark.queries.similarity_q import (
+        docs_token_dict,
+        docs_token_stats,
+    )
+    from hive_similarity_join_spark.sources.loader import load_table
+
+    r = _tokenized(load_table(spark, SF_SMOKE, "documents"), "doc_id", "text", None)
+    # the kernel's original stage 1, written out independently
+    freq = (
+        r.select(F.explode("_toks").alias("_tok"))
+        .groupBy("_tok")
+        .agg(F.count(F.lit(1)).alias("_freq"))
+    )
+    inline = ranked_by(freq, ["_freq", "_tok"], "_rank").select("_tok", "_rank")
+
+    def rows(df, cols):
+        return sorted(tuple(x) for x in df.select(*cols).collect())
+
+    got = rows(docs_token_dict(spark, SF_SMOKE), ["_tok", "_rank"])
+    assert got == rows(inline, ["_tok", "_rank"]) and got
+    cols = ["_tok", "_rank", "_w"]
+    weights = rows(_rarity_weights(docs_token_stats(spark, SF_SMOKE)), cols)
+    assert weights == rows(_rarity_dict(r), cols)
+
+
+def test_simjoin_keys_rank_the_corpus_once(spark, monkeypatch):
+    """The corpus vocabulary is ranked once per session: building the
+    five simjoin benchmark keys on a fresh scope runs exactly one
+    ranked_by pass (the shared docs_token_stats build) — the flagship,
+    the rank arrays and the weighted relation all read its views."""
+    import sys
+
+    from hive_similarity_join_spark.operators import rank
+    from hive_similarity_join_spark.registry import QUERIES
+
+    calls = []
+    original = rank.ranked_by
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return original(*args, **kwargs)
+
+    # every module that bound the function at import gets the wrapper
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("hive_similarity_join_spark")
+                and getattr(mod, "ranked_by", None) is original):
+            monkeypatch.setattr(mod, "ranked_by", counted)
+    release_session_pins()
+    try:
+        for k in ("jaccard_self", "overlap", "jaccard_rs", "containment",
+                  "weighted_jaccard"):
+            QUERIES[f"q_simjoin_{k}"](spark, SF_SMOKE)
+        assert len(calls) == 1, f"{len(calls)} rank passes"
+    finally:
+        release_session_pins()

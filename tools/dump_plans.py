@@ -23,7 +23,10 @@ from hive_similarity_join_spark.session import DEFAULT_SHUFFLE_PARTITIONS, get_s
 HEADLINERS: dict[str, str] = {
     "q_simjoin_jaccard_self": (
         "The flagship. Look for: one BroadcastHashJoin (the vocabulary-"
-        "sized token dictionary — the only broadcast), REPARTITION_BY_NUM "
+        "sized token dictionary — the only broadcast; its side is a Scan "
+        "ExistingRDD, the (_tok, _rank) view of the session-checkpointed "
+        "docs_token_stats, so no rank pass runs in this plan), "
+        "REPARTITION_BY_NUM "
         "with the salt columns (explicit parallelism for the candidate "
         "join, exempt from AQE coalescing), InMemoryTableScan for the "
         "persisted tokenized/rank-sorted relations (each consumed 2-4x), "
